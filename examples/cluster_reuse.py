@@ -23,8 +23,10 @@ the keep-one dedup a training pipeline applies before tokenization —
 and checks the keep-one invariant (survivors = corpus minus
 non-canonical dup-group members) against the component table itself.
 
-`bench.py`'s `cluster_reuse_ab` row measures what the artifact buys:
-(build + 5 consumers) vs (5 x inline recompute) at sf0.1.
+What the artifact buys — (build + 5 consumers) vs (5 x inline
+recompute) at sf0.1 — is recorded in BENCH_HEADLINE.json's
+`cluster_reuse_ab` row, a measurement of the retired headline harness
+(5.5x per reporting cycle, 2.34x counting the build).
 
 Run: python examples/cluster_reuse.py [sf_dir]
 """

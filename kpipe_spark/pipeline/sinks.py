@@ -59,9 +59,7 @@ def dlq_frame(applied: DataFrame, error_class: str = "ProcessingException") -> D
         hdr(
             "x-dlq-source-timestamp",
             (
-                F.col("timestamp").cast("long")
-                if have("timestamp")
-                else F.lit(-1)
+                _epoch_seconds(failed) if have("timestamp") else F.lit(-1)
             ).cast("string"),
         ),
     )
@@ -81,6 +79,17 @@ def dlq_frame(applied: DataFrame, error_class: str = "ProcessingException") -> D
         # "original key/value/headers" degrades to "original columns"
         keep = [c for c in cols if c not in (STATUS_COL, ERROR_COL, "headers")]
     return out.select(*keep, "headers", F.col(ERROR_COL).alias("error"))
+
+
+def _epoch_seconds(frame: DataFrame) -> Column:
+    """Whole epoch seconds of the frame's ``timestamp`` column. Spark
+    refuses to cast TIMESTAMP_NTZ to BIGINT, so a zone-less wall clock
+    is read as a TIMESTAMP first; the session zone is UTC (session.py),
+    which gives both types the same header."""
+    ts = F.col("timestamp")
+    if dict(frame.dtypes)["timestamp"] == "timestamp_ntz":
+        ts = ts.cast("timestamp")
+    return ts.cast("long")
 
 
 class IdempotentDlqParquet:

@@ -60,7 +60,7 @@ def get_spark(
         # plan-shape suite) unchanged.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(128 * 1024 * 1024)),
+            str(128 * 1024 * 1024),
         )
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         # Arrow everywhere Python touches data (pandas UDFs, toPandas)

@@ -28,6 +28,7 @@ import time
 from collections import deque
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from itertools import repeat
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -65,10 +66,6 @@ class Metrics:
         self.counters[key] = self.counters.get(key, 0) + n
 
 
-class CircuitOpen(Exception):
-    pass
-
-
 @dataclass
 class CircuitBreaker:
     """Count-window failure-rate breaker (Stream.withCircuitBreaker,
@@ -91,11 +88,11 @@ class CircuitBreaker:
 
     def record(self, passed: int, filtered: int, failed: int) -> None:
         # one terminal outcome per record, after retries (CB sees terminal
-        # outcomes only, CircuitBreakerController.java:34-60)
-        for _ in range(passed + filtered):
-            self._outcomes.append(0)
-        for _ in range(failed):
-            self._outcomes.append(1)
+        # outcomes only, CircuitBreakerController.java:34-60); only the
+        # last `window` entries of each kind can survive the trim, so a
+        # 1M-record batch costs O(window), not O(records)
+        self._outcomes.extend(repeat(0, min(passed + filtered, self.window)))
+        self._outcomes.extend(repeat(1, min(failed, self.window)))
         while len(self._outcomes) > self.window:
             self._outcomes.popleft()
         if self.state == "HALF_OPEN":

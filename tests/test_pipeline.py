@@ -181,7 +181,10 @@ def test_pipe_pandas_per_row_failure(spark, df):
 
 def test_dlq_envelope_headers(spark):
     """DLQ record carries original key/value/headers + x-dlq-* set
-    (KPipeProducer.java:178-196, FIXTURES.md F5)."""
+    (KPipeProducer.java:178-196, FIXTURES.md F5). The source timestamp
+    header is whole epoch seconds for both Spark timestamp types (a
+    file or memory source may hand over TIMESTAMP_NTZ, which Spark will
+    not cast to BIGINT directly)."""
     kafka_df = spark.createDataFrame(
         [
             (
@@ -197,17 +200,22 @@ def test_dlq_envelope_headers(spark):
         "headers array<struct<key: string, value: binary>>",
     )
     p = Pipeline().fail_when(F.lit(True), "DecodeError")
-    dlq = dlq_frame(p.apply(kafka_df)).collect()
-    assert len(dlq) == 1
-    row = dlq[0]
-    assert bytes(row["key"]) == b"k1"
-    assert bytes(row["value"]) == b"payload"
-    hdrs = {h["key"]: bytes(h["value"]) for h in row["headers"]}
-    assert hdrs["traceparent"] == b"00-abc"  # original headers preserved
-    assert hdrs["x-dlq-exception-message"] == b"DecodeError"
-    assert hdrs["x-dlq-source-topic"] == b"orders"
-    assert hdrs["x-dlq-source-partition"] == b"3"
-    assert hdrs["x-dlq-source-offset"] == b"42"
+    for ts_type in ("timestamp", "timestamp_ntz"):
+        src = kafka_df.withColumn(
+            "timestamp", F.lit("2026-01-01 00:00:01.234").cast(ts_type)
+        )
+        dlq = dlq_frame(p.apply(src)).collect()
+        assert len(dlq) == 1
+        row = dlq[0]
+        assert bytes(row["key"]) == b"k1"
+        assert bytes(row["value"]) == b"payload"
+        hdrs = {h["key"]: bytes(h["value"]) for h in row["headers"]}
+        assert hdrs["traceparent"] == b"00-abc"  # original headers preserved
+        assert hdrs["x-dlq-exception-message"] == b"DecodeError"
+        assert hdrs["x-dlq-source-topic"] == b"orders"
+        assert hdrs["x-dlq-source-partition"] == b"3"
+        assert hdrs["x-dlq-source-offset"] == b"42"
+        assert hdrs["x-dlq-source-timestamp"] == b"1767225601", ts_type
 
 
 def test_skip_bytes_and_confluent_envelope(spark):

@@ -67,12 +67,37 @@ def test_protobuf_envelope_shorthand_zero(body):
     assert (sid, idx, out_body) == (42, [0], body)
 
 
+def _per_record_breaker(batches, threshold, window):
+    """Reference breaker: one window entry per record, trimmed after
+    each batch. Yields (window contents, state, trips) after each
+    batch."""
+    outcomes: list[int] = []
+    state, trips = "CLOSED", 0
+    for passed, filtered, failed in batches:
+        if state == "OPEN":
+            state = "HALF_OPEN"
+        for _ in range(passed + filtered):
+            outcomes.append(0)
+        for _ in range(failed):
+            outcomes.append(1)
+        outcomes = outcomes[-window:]
+        if state == "HALF_OPEN":
+            if failed > 0:
+                state, trips = "OPEN", trips + 1
+            else:
+                state, outcomes = "CLOSED", []
+        elif state == "CLOSED" and len(outcomes) >= window:
+            if sum(outcomes) / len(outcomes) >= threshold:
+                state, trips = "OPEN", trips + 1
+        yield list(outcomes), state, trips
+
+
 @given(
     st.lists(
         st.tuples(
-            st.integers(min_value=0, max_value=20),  # passed
-            st.integers(min_value=0, max_value=20),  # filtered
-            st.integers(min_value=0, max_value=20),  # failed
+            st.integers(min_value=0, max_value=50),  # passed
+            st.integers(min_value=0, max_value=50),  # filtered
+            st.integers(min_value=0, max_value=50),  # failed
         ),
         min_size=1,
         max_size=50,
@@ -83,16 +108,18 @@ def test_circuit_breaker_invariants(batches):
     """State-machine invariants under arbitrary outcome sequences
     (CircuitBreakerPropertyTest analogue):
     - state is always one of CLOSED/OPEN/HALF_OPEN,
-    - the breaker only trips when the window is full AND the rate
-      crosses the threshold,
+    - window contents, state and trips equal the per-record reference
+      after every batch (batches run past the window, so the capped
+      appends are exercised),
     - an all-success history never trips."""
     cb = CircuitBreaker(failure_threshold=0.5, window=30, open_duration_s=0.0)
-    for passed, filtered, failed in batches:
+    reference = _per_record_breaker(batches, threshold=0.5, window=30)
+    for (passed, filtered, failed), expected in zip(batches, reference):
         if cb.state == "OPEN":
             cb.gate()  # open_duration 0 -> immediate HALF_OPEN probe
         cb.record(passed, filtered, failed)
         assert cb.state in ("CLOSED", "OPEN", "HALF_OPEN")
-    assert cb.trips >= 0
+        assert (list(cb._outcomes), cb.state, cb.trips) == expected
 
     clean = CircuitBreaker(failure_threshold=0.5, window=10)
     for passed, filtered, _ in batches:
