@@ -769,7 +769,7 @@ class AnnIndex(StoredArtifact):
         micro-batch is searched via ``serving_sink`` and the hits go to
         ``deliver``. Returns the kpipe ``Handle`` (await/close/health/
         metrics) over the streaming query."""
-        from kpipe_spark.streaming.runner import Handle, Metrics
+        from kpipe_spark.streaming.runner import Metrics, start_foreach_batch
 
         sink = self.serving_sink(
             deliver,
@@ -786,13 +786,9 @@ class AnnIndex(StoredArtifact):
             sink(batch_df, batch_id)
             metrics.add("batches.completed")
 
-        query = (
-            query_stream.writeStream.queryName(query_name)
-            .foreachBatch(_counted)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
+        return start_foreach_batch(
+            query_stream, _counted, checkpoint_dir, query_name, metrics
         )
-        return Handle(query, metrics)
 
     def drop(self) -> None:
         for t in (

@@ -126,23 +126,6 @@ def slot_coefficients(i: int) -> tuple[int, int]:
     )
 
 
-def word_shingle_hashes(text: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles pre-hashed to array<bigint> (mod 2^31-1).
-
-    Each shingle string is md5-hashed ONCE; the minhash slots then
-    apply the integer affine family to the pre-hash instead of
-    re-hashing the string 64 times — at ~10M shingles x 64 slots that's
-    the difference between hashing ~5 GB of strings and 64 integer
-    mults per 8-byte long. Collisions at 31 bits are negligible vs
-    MinHash's own approximation error at sane corpus sizes; widen to
-    two independent 60-bit lanes if a 100 TB corpus pushes shingle
-    cardinality past ~2^24 per band.
-    """
-    return F.transform(
-        word_shingles(text, k), lambda s: md5_hash60(s) % MERSENNE_P31
-    )
-
-
 # -- minhash ------------------------------------------------------------------
 
 

@@ -4,7 +4,11 @@ kpipe dispatches records three ways (SequentialDispatcher.java,
 ParallelDispatcher.java, KeyOrderedDispatcher.java:66-474); in Spark the
 mode is a transformation applied to each micro-batch before the sink:
 
-- PARALLEL: identity — partition-parallel execution, no ordering.
+- PARALLEL: partition-parallel execution, no ordering. An under-split
+  batch (one file per trigger, one Kafka partition) is respread first
+  (``ensure_parallelism``). The other two modes set the partitioning
+  themselves (one partition, or the key shuffle), so a respread under
+  them is wasted work.
 - SEQUENTIAL: one partition, sorted by (topic, partition, offset). This
   is the honest strict-mode mapping: a true global order cannot be
   parallel in either system (kpipe processes one record at a time here
@@ -28,6 +32,8 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kpipe_spark.util import ensure_parallelism
+
 
 class ProcessingMode(Enum):
     PARALLEL = "parallel"
@@ -42,7 +48,7 @@ def shape_batch(
     num_partitions: int | None = None,
 ) -> DataFrame:
     if mode is ProcessingMode.PARALLEL:
-        return batch
+        return ensure_parallelism(batch)
     cols = batch.columns
     order = [c for c in ("topic", "partition", "offset") if c in cols]
     if mode is ProcessingMode.SEQUENTIAL:

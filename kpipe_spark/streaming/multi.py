@@ -9,8 +9,9 @@ foreachBatch each route filters its topic and runs its own pipeline +
 terminals. Offsets for unrouted rows advance automatically — the batch
 commit covers the whole offset range.
 
-The circuit breaker (when set) observes outcomes across ALL routes,
-matching the reference (docs/API.md:117: consumer-wide CB).
+Departure from the reference (docs/API.md:117: consumer-wide CB): there
+is no consumer-wide circuit breaker. Each route's StreamRunner carries
+its own (when set) and gates only that route's branch.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kpipe_spark.streaming.runner import Metrics, StreamRunner
+from kpipe_spark.streaming.runner import Metrics, StreamRunner, start_foreach_batch
 
 log = logging.getLogger(__name__)
 
@@ -29,8 +30,8 @@ log = logging.getLogger(__name__)
 @dataclass
 class MultiRunner:
     """Route map topic -> StreamRunner. Each route keeps its own
-    pipeline/sink/DLQ; consumer-wide concerns (metrics totals, circuit
-    breaker, checkpoint) are shared."""
+    pipeline/sink/DLQ, counters and circuit breaker; the source and the
+    checkpoint are shared, and ``totals()`` gathers the counters."""
 
     routes: dict[str, StreamRunner]
     topic_col: str = "topic"
@@ -50,7 +51,6 @@ class MultiRunner:
             )
             for r in unrouted:
                 t = r[self.topic_col]
-                self.metrics.add("records.dropped.unrouted", r["n"])
                 if t not in self._warned_topics:
                     log.warning("no route for topic %r — %d records dropped", t, r["n"])
                     self._warned_topics.add(t)
@@ -59,6 +59,8 @@ class MultiRunner:
             for topic, runner in self.routes.items():
                 branch = batch.filter(F.col(self.topic_col) == topic)
                 runner.process_batch(branch, batch_id)
+            # counted once all routes returned, as in StreamRunner
+            self.metrics.add("records.dropped.unrouted", sum(r["n"] for r in unrouted))
             self.metrics.add("batches.completed")
         finally:
             batch.unpersist()
@@ -72,12 +74,6 @@ class MultiRunner:
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str,
               query_name: str = "kpipe-multi"):
-        from kpipe_spark.streaming.runner import Handle
-
-        query = (
-            stream_df.writeStream.queryName(query_name)
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
+        return start_foreach_batch(
+            stream_df, self.process_batch, checkpoint_dir, query_name, self.metrics
         )
-        return Handle(query, self.metrics)

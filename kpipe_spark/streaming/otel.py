@@ -116,9 +116,8 @@ class OtelConsumerMetrics:
 
     def export(self, metrics: Metrics) -> dict[str, int]:
         """Push counter deltas since the previous export; returns the
-        deltas (useful for assertions/logging). Call per batch, per
-        scrape, or from a ``MetricsListener`` hook — deltas make the
-        cadence irrelevant."""
+        deltas (useful for assertions/logging). Call per batch or per
+        scrape — deltas make the cadence irrelevant."""
         deltas: dict[str, int] = {}
         for key, instrument in self._instruments.items():
             now = metrics.counters.get(key, 0)

@@ -39,7 +39,6 @@ from kpipe_spark.pipeline.result import ERROR_COL, FAILED, FILTERED, PASSED, STA
 from kpipe_spark.pipeline.sinks import dlq_frame
 from kpipe_spark.streaming.backpressure import BackpressureGovernor, kafka_lag
 from kpipe_spark.streaming.modes import ProcessingMode, shape_batch
-from kpipe_spark.util import ensure_parallelism
 
 log = logging.getLogger(__name__)
 
@@ -192,12 +191,9 @@ class StreamRunner:
         if self.circuit_breaker:
             self.circuit_breaker.gate()
 
-        # an under-split source (one file per trigger, one Kafka
-        # partition) would otherwise run the whole pipeline single-task
-        shaped = shape_batch(
-            ensure_parallelism(batch), self.mode, key_col=self.key_col
+        applied = self.pipeline.apply(
+            shape_batch(batch, self.mode, key_col=self.key_col)
         )
-        applied = self.pipeline.apply(shaped)
         applied.persist()
         try:
             from kpipe_spark.pipeline.result import outcome_counts
@@ -206,13 +202,10 @@ class StreamRunner:
             n_passed = by_status[PASSED]
             n_filtered = by_status[FILTERED]
             n_failed = by_status[FAILED]
-            self.metrics.add("records.received", n_passed + n_filtered + n_failed)
-            self.metrics.add("pipeline.processed.passed", n_passed)
-            self.metrics.add("pipeline.processed.filtered", n_filtered)
-            self.metrics.add("pipeline.processed.failed", n_failed)
 
             # observers are observe-only; a throwing observer is swallowed
-            # (DefaultStream.java:307-369)
+            # (DefaultStream.java:307-369). Like kpipe's onFailed they
+            # fire per attempt, so a replayed batch notifies again.
             for cb, arg in ((self.on_filtered, n_filtered), (self.on_failed, n_failed)):
                 if cb and arg:
                     try:
@@ -227,11 +220,8 @@ class StreamRunner:
             # failures succeeded must CLEAR the pre-crash attempt's
             # parks, not leave them stranded (IdempotentDlqParquet).
             if self.dlq_writer is not None:
-                dlq = dlq_frame(applied)
                 try:
-                    self.dlq_writer(dlq, batch_id)
-                    if n_failed:
-                        self.metrics.add("dlq.sent", n_failed)
+                    self.dlq_writer(dlq_frame(applied), batch_id)
                 except Exception:
                     self.metrics.add("dlq.send.failures")
                     # the park failure IS a terminal-outcome failure
@@ -279,6 +269,15 @@ class StreamRunner:
                 self._breaker_observe_failure(n_passed or 1)
                 raise  # batch not committed ⇒ replay
 
+            # 3. account for the batch, once: only the attempt whose
+            # terminals all returned gets here, so a batch that raised
+            # and replays is counted on the replay alone
+            self.metrics.add("records.received", n_passed + n_filtered + n_failed)
+            self.metrics.add("pipeline.processed.passed", n_passed)
+            self.metrics.add("pipeline.processed.filtered", n_filtered)
+            self.metrics.add("pipeline.processed.failed", n_failed)
+            if self.dlq_writer is not None:
+                self.metrics.add("dlq.sent", n_failed)
             self.metrics.add("batches.completed")
             if self.circuit_breaker:
                 self.circuit_breaker.record(n_passed, n_filtered, n_failed)
@@ -295,14 +294,32 @@ class StreamRunner:
         backpressure: BackpressureGovernor | None = None,
     ):
         """writeStream.foreachBatch(...).start() -> Handle."""
-        writer = (
-            stream_df.writeStream.queryName(query_name)
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
+        return start_foreach_batch(
+            stream_df, self.process_batch, checkpoint_dir, query_name,
+            self.metrics, trigger=trigger, governor=backpressure,
         )
-        if trigger:
-            writer = writer.trigger(**trigger)
-        return Handle(writer.start(), self.metrics, governor=backpressure)
+
+
+def start_foreach_batch(
+    stream_df: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    query_name: str,
+    metrics: Metrics,
+    trigger: dict[str, Any] | None = None,
+    governor: BackpressureGovernor | None = None,
+) -> Handle:
+    """The one way a kpipe terminal starts: ``process(batch, batch_id)``
+    runs as the query's foreachBatch, and the returned ``Handle``
+    reports ``metrics``."""
+    writer = (
+        stream_df.writeStream.queryName(query_name)
+        .foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return Handle(writer.start(), metrics, governor=governor)
 
 
 class Handle:

@@ -316,18 +316,6 @@ def test_sr_resolver_constructed_once_per_worker_not_per_batch(spark, tmp_path):
     )
 
 
-def test_metrics_listener_rate_gauge_handles_nan():
-    """Round-10 review: Spark reports NaN rates on the first progress
-    event; float('nan') is truthy so `or 0` never catches it and
-    int(nan) raises mid-callback. The gauge helper contains it."""
-    from kpipe_spark.streaming.observability import _rate_gauge
-
-    assert _rate_gauge(None) == 0
-    assert _rate_gauge(float("nan")) == 0
-    assert _rate_gauge(123.9) == 123
-    assert _rate_gauge(0.0) == 0
-
-
 def test_sr_resolver_cache_is_process_lifetime_across_tasks(tmp_path):
     """Round-10 ADVICE: the closure dict alone is TASK-lifetime (every
     task deserializes the UDF with a fresh empty dict). The module-

@@ -234,3 +234,28 @@ def test_component_join_is_size_gated_both_regimes(spark, tmp_path):
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
         )
+
+
+def test_shape_batch_respreads_only_parallel(spark, tmp_path):
+    """The batch shape is decided in one place: on a one-split
+    micro-batch PARALLEL respreads round-robin, SEQUENTIAL coalesces
+    with no shuffle under it, and KEY_ORDERED's key shuffle is its only
+    Exchange."""
+    from kpipe_spark.streaming.modes import ProcessingMode, shape_batch
+
+    path = str(tmp_path / "one_split")
+    spark.range(200).selectExpr(
+        "'t' AS topic", "0 AS partition", "id AS offset", "CAST(id % 7 AS STRING) AS key"
+    ).coalesce(1).write.parquet(path)
+    batch = spark.read.parquet(path)
+    assert spark.sparkContext.defaultParallelism > 1
+
+    def exchanges(mode):
+        plan = (
+            shape_batch(batch, mode)._jdf.queryExecution().executedPlan().toString()
+        )
+        return re.findall(r"Exchange (\w+)", plan)
+
+    assert exchanges(ProcessingMode.PARALLEL) == ["RoundRobinPartitioning"]
+    assert exchanges(ProcessingMode.SEQUENTIAL) == []
+    assert exchanges(ProcessingMode.KEY_ORDERED) == ["hashpartitioning"]

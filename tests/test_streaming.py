@@ -161,6 +161,49 @@ def test_crash_restart_at_least_once(spark, tmp_path):
     assert first_ids | result.second_run_ids("event_id") == set(range(30))
 
 
+def test_replayed_batch_counts_once(spark, tmp_path):
+    """A batch whose sink raises is replayed on restart; the counters
+    count it once, on the attempt that completes (kpipe's consumer
+    counters equal the truth, docs/OBSERVABILITY.md:20-42)."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    data = rows_batch(0, 10)
+    write_batch_file(src, data, "a.json")
+
+    calls = {"sink": 0}
+    delivered, parked = [], []
+
+    def sink_fails_once(df, bid):
+        calls["sink"] += 1
+        if calls["sink"] == 1:
+            raise RuntimeError("sink down")
+        delivered.extend(df.collect())
+
+    def dlq(df, bid):
+        parked[:] = df.collect()  # batch-keyed overwrite, like IdempotentDlqParquet
+
+    runner = StreamRunner(pipeline=demo_pipeline(), sink=sink_fails_once, dlq_writer=dlq)
+    h = runner.start(file_source(spark, src, SCHEMA), ckpt, query_name="once")
+    with pytest.raises(Exception):
+        h.process_all_available()
+    h.close()
+    h = runner.start(file_source(spark, src, SCHEMA), ckpt, query_name="once2")
+    h.process_all_available()
+    h.close()
+
+    n_failed = sum(r["event_type"] == "error" for r in data)
+    n_passed = sum(r["event_type"] != "error" and r["value"] > 50.0 for r in data)
+    assert calls["sink"] == 2 and len(delivered) == n_passed and len(parked) == n_failed
+    m = h.metrics()
+    assert m["records.received"] == len(data)
+    assert m["pipeline.processed.passed"] == n_passed
+    assert m["pipeline.processed.filtered"] == len(data) - n_passed - n_failed
+    assert m["pipeline.processed.failed"] == n_failed
+    assert m["dlq.sent"] == n_failed
+    assert m["batches.completed"] == 1
+    assert m["sink.errors"] == 1  # per attempt, like kpipe's onFailed
+
+
 def test_key_ordered_mode(spark, tmp_path):
     """KEY_ORDERED: per-key offset order preserved; keys in one
     partition (KeyOrderedDispatcher semantics via hash shuffle)."""

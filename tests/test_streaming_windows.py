@@ -293,38 +293,6 @@ def test_stream_static_enrich_join(spark, tmp_path):
         q.stop()
 
 
-def test_metrics_listener_folds_progress(spark, tmp_path):
-    """R9 observability bridge: QueryProgress events land in the same
-    Metrics counter surface the runner uses (docs/OBSERVABILITY.md:20-42
-    names extended with engine rates)."""
-    from kpipe_spark.streaming.observability import attach_metrics_listener
-
-    listener = attach_metrics_listener(spark)
-    try:
-        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-        write_batch_file(src, [ev(i, "k", "2024-01-01 00:00:00") for i in range(25)], "b1.json")
-        q = run_to_memory(
-            stream(spark, src).select("event_id"), "obs", ckpt
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(10)
-        import time
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            c = listener.metrics.counters
-            if c.get("progress.input.rows", 0) >= 25 and c.get("queries.terminated.ok", 0) >= 1:
-                break
-            time.sleep(0.2)  # listener events are async
-        c = listener.metrics.counters
-        assert c["queries.started"] >= 1
-        assert c["progress.input.rows"] >= 25
-        assert c["progress.batches"] >= 1
-        assert c["queries.terminated.ok"] >= 1
-    finally:
-        spark.streams.removeListener(listener)
-
-
 def test_streaming_content_dedup(spark, tmp_path):
     """Streaming exact dedup on the content fingerprint: duplicate TEXT
     arriving in later micro-batches is suppressed within the watermark
